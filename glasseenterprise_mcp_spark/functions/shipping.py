@@ -11,6 +11,7 @@ SparkContext here."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -18,6 +19,39 @@ import zipfile
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[str] = set()
+
+
+def _sources(pkg_dir: str) -> list[str]:
+    out = []
+    for dirpath, dirs, files in os.walk(pkg_dir):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        out += [os.path.join(dirpath, f) for f in sorted(files) if f.endswith(".py")]
+    return out
+
+
+def package_zip(pkg_dir: str) -> str:
+    """Zip of the package's ``.py`` sources in the temp dir, named by a
+    digest of their paths and contents. Workers put the zip ahead of
+    ``PYTHONPATH``, so a zip left by an older tree must never be reused:
+    a changed source gives a new name, hence a fresh zip."""
+    root = os.path.dirname(pkg_dir)
+    files = _sources(pkg_dir)
+    h = hashlib.sha256()
+    for full in files:
+        h.update(os.path.relpath(full, root).encode() + b"\0")
+        with open(full, "rb") as f:
+            h.update(f.read() + b"\0")
+    zpath = os.path.join(
+        tempfile.gettempdir(),
+        f"{os.path.basename(pkg_dir)}_pkg_{h.hexdigest()[:16]}.zip",
+    )
+    if not os.path.exists(zpath):
+        tmp = f"{zpath}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as z:
+            for full in files:
+                z.write(full, os.path.relpath(full, root))
+        os.replace(tmp, zpath)
+    return zpath
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -29,20 +63,5 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     if key in _SHIPPED:
         return
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(
-        tempfile.gettempdir(), "glasseenterprise_mcp_spark_pkg.zip"
-    )
-    if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for dirpath, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in dirpath:
-                    continue
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(dirpath, f)
-                        z.write(full, os.path.relpath(full, root))
-        os.replace(tmp, zpath)
-    sc.addPyFile(zpath)
+    sc.addPyFile(package_zip(pkg_dir))
     _SHIPPED.add(key)

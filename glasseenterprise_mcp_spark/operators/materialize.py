@@ -4,7 +4,7 @@ snapshot-stamped, written to partitioned tables with upsert semantics.
 Analogues: node upsert grouped by type (src/neo4j/saveNodes.ts:32-201),
 versioned edge upsert keyed (relKey, snapshotVersion)
 (src/neo4j/saveRelationships.ts:16-57), pre-write dedup
-(relationshipBuilder.ts:943-953), dedup-merge of node attributes
+(relationshipBuilder.ts:943-953), multi-source node attributes
 (saveNodes.ts:86-104), snapshot stamp minted once per run on the driver
 (src/index.ts:176 — N12 determinism across task retries).
 
@@ -20,6 +20,7 @@ contract either way.
 from __future__ import annotations
 
 import os
+import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -44,7 +45,13 @@ def build_nodes(
     """Canonical node table: turn + conversation nodes from transcripts,
     typed mention nodes (entity/tool/config/error/url/resource) from
     mentions. Display name per node = modal surface (count desc, surface asc
-    — A4/W1); first sighting = min (conv_id, turn_idx) lexicographic."""
+    — A4/W1); first sighting = min (conv_id, turn_idx) lexicographic.
+
+    ``attrs`` (§1.4) carries the A2 multi-source stats (saveNodes.ts:86-104)
+    in one aggregation: ``MENTION_NODE_KIND`` maps ``derive`` into the
+    entity key space, so the per-entity count of derive directives is a
+    per-(type, key) count in the same groupBy as ``n_mentions``, emitted as
+    ``n_derives`` only when it is > 0. Map keys are in sorted order."""
     turns = transcripts.select(
         turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("id"),
         F.lit("turn").alias("type"),
@@ -95,6 +102,7 @@ def build_nodes(
         F.col("surface"),
         F.col("conv_id"),
         F.col("turn_idx"),
+        (F.col("mtype") == "derive").cast("int").alias("is_derive"),
     )
     # first-sighting arg-min encoded as 'conv|zero-padded-turn' so plain MIN
     # is the lexicographic (conv_id, turn_idx) minimum — identical in DuckDB.
@@ -104,8 +112,13 @@ def build_nodes(
     counts = typed.groupBy("type", "key", "norm", "surface").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.min(first_key).alias("first_k"),
+        F.sum("is_derive").alias("n_derives"),
     )
     w = Window.partitionBy("type", "key").orderBy(F.desc("cnt"), F.asc("surface"))
+    stats = [
+        F.lit("n_mentions"), F.col("n_mentions").cast("string"),
+        F.lit("n_surfaces"), F.col("n_surfaces").cast("string"),
+    ]
     mention_nodes = (
         counts.withColumn("rn", F.row_number().over(w))
         .groupBy("type", "key")
@@ -115,6 +128,7 @@ def build_nodes(
             F.min("first_k").alias("first_k"),
             F.sum("cnt").alias("n_mentions"),
             F.count(F.lit(1)).alias("n_surfaces"),
+            F.sum("n_derives").alias("n_derives"),
         )
         .select(
             F.unhex(F.md5(F.concat_ws("|", "type", "key"))).alias("id"),
@@ -124,12 +138,14 @@ def build_nodes(
             "key",
             F.split(F.col("first_k"), r"\|").getItem(0).alias("first_conv"),
             F.split(F.col("first_k"), r"\|").getItem(1).cast("int").alias("first_turn"),
-            F.create_map(
-                F.lit("n_mentions"),
-                F.col("n_mentions").cast("string"),
-                F.lit("n_surfaces"),
-                F.col("n_surfaces").cast("string"),
-            ).alias("attrs"),
+            F.when(
+                F.col("n_derives") > 0,
+                F.create_map(
+                    F.lit("n_derives"), F.col("n_derives").cast("string"), *stats
+                ),
+            )
+            .otherwise(F.create_map(*stats))
+            .alias("attrs"),
         )
     )
 
@@ -140,58 +156,9 @@ def build_nodes(
     )
 
 
-def build_nodes_with_attrs(
-    transcripts: DataFrame, mentions: DataFrame, snapshot_version: str
-) -> DataFrame:
-    """build_nodes + A2 dedup-merge (saveNodes.ts:86-104): a second node
-    source — per-entity lineage stats from derive directives — carries attrs
-    for ids the mention scan also produces; ``merge_node_attrs`` merges the
-    two sources (scalars first-non-null by priority, attrs maps unioned).
-
-    Scale design (the r5 verdict's one genuine plan flaw, fixed r6): only
-    ``entity`` ids are ever multi-source (mention stats ⊕ derive stats —
-    MENTION_NODE_KIND maps ``derive`` into the entity key space, so derive
-    ids ⊆ entity node ids). Turn/conversation/tool/… nodes — the bulk at
-    corpus scale (one per turn) — carry attrs built in place and ROUTE
-    AROUND the generic explode→2-groupBy→join merge; only the (small,
-    already-aggregated) entity slice pays for it. At sf1.0 this took
-    a2_node_attrs from 101.8s to the same order as the plain node build."""
-    # checkpoint: the entity slice and the pass-through rest both consume
-    # ``base`` — without it each branch recomputes the whole node build
-    # (scan + mention-stats aggregation), which at sf1.0 is most of a2's
-    # residual cost over the plain d_nodes build. LAZY (eager would run the
-    # whole node build at PLAN-BUILD time — run_pipeline constructs this
-    # plan unconditionally, so an eager checkpoint charged every sink-less
-    # pipeline run the full node materialization even when nothing read
-    # nodes: the r6 headline read 18.2s vs r5's ~11.5s on an idle host
-    # until this was caught); the first consumer computes it once, later
-    # consumers reuse the persisted RDD.
-    base = build_nodes(transcripts, mentions, snapshot_version).localCheckpoint(
-        eager=False
-    )
-    derive_stats = (
-        mentions.filter(F.col("mtype") == "derive")
-        .groupBy("norm")
-        .agg(F.count(F.lit(1)).alias("n_derives"))
-        .select(
-            node_id_col("entity", F.col("norm")).alias("id"),
-            F.lit(None).cast("string").alias("type"),
-            F.lit(None).cast("string").alias("name"),
-            F.lit(None).cast("string").alias("norm"),
-            F.lit(None).cast("string").alias("key"),
-            F.lit(None).cast("string").alias("first_conv"),
-            F.lit(None).cast("int").alias("first_turn"),
-            F.create_map(
-                F.lit("n_derives"), F.col("n_derives").cast("string")
-            ).alias("attrs"),
-            F.lit(None).cast("string").alias("snapshot_version"),
-            F.lit(1).alias("_prio"),
-        )
-    )
-    entity = base.filter(F.col("type") == "entity").withColumn("_prio", F.lit(0))
-    merged_entity = merge_node_attrs(entity.unionByName(derive_stats), key="id")
-    rest = base.filter(F.col("type") != "entity")
-    return rest.select(*merged_entity.columns).unionByName(merged_entity)
+# the a2_node_attrs query and the benchmark's traced run call the node
+# build by this name
+build_nodes_with_attrs = build_nodes
 
 
 def node_attrs_cte() -> str:
@@ -315,46 +282,6 @@ def build_edges(
     return union.withColumn("snapshot_version", F.lit(snapshot_version))
 
 
-def merge_node_attrs(nodes_with_attrs: DataFrame, key: str = "id") -> DataFrame:
-    """A2 analogue (saveNodes.ts:86-104): dedup-merge rows sharing an id —
-    scalar fields take the first non-null (by deterministic ``_prio``
-    ordering if present, else min), attrs maps are merged with
-    earlier-row-wins on key collisions.
-
-    Input: (id, *scalar cols, attrs map). One hash shuffle on the id."""
-    scalar = [
-        c for c in nodes_with_attrs.columns if c not in (key, "attrs", "_prio")
-    ]
-    has_prio = "_prio" in nodes_with_attrs.columns
-    df = nodes_with_attrs if has_prio else nodes_with_attrs.withColumn(
-        "_prio", F.lit(0)
-    )
-    # first-non-null by priority: min_by with nulls pushed to +inf priority;
-    # priority ties fall back to the value itself (fully deterministic,
-    # unlike first(ignorenulls) which is row-order dependent)
-    big = 2**62
-    aggs = [
-        F.expr(
-            f"min_by({c}, struct(CASE WHEN {c} IS NULL THEN {big} ELSE _prio END, {c}))"
-        ).alias(c)
-        for c in scalar
-    ]
-    exploded = df.select(key, "_prio", F.explode_outer("attrs").alias("k", "v"))
-    merged_maps = (
-        exploded.filter(F.col("k").isNotNull())
-        .groupBy(key, "k")
-        .agg(F.expr("min_by(v, struct(_prio, v))").alias("v"))
-        .groupBy(key)
-        .agg(
-            F.map_from_arrays(
-                F.expr("transform(array_sort(collect_list(struct(k, v))), x -> x.k)"),
-                F.expr("transform(array_sort(collect_list(struct(k, v))), x -> x.v)"),
-            ).alias("attrs")
-        )
-    )
-    return df.groupBy(key).agg(*aggs).join(merged_maps, key, "left")
-
-
 # --------------------------------------------------------------------------
 # Sink interface: Iceberg MERGE when available, parquet MoR fallback.
 # --------------------------------------------------------------------------
@@ -421,9 +348,10 @@ class GraphSink:
                 f"GraphSink parquet fallback requires a local path, got {path}; "
                 "configure an Iceberg catalog (spark.sql.catalog.kg) for object stores"
             )
-        merged.repartition(*partition_by).write.mode("overwrite").partitionBy(
-            *partition_by
-        ).parquet(tmp)
+        # no repartition by the partition columns: hashing on a low-
+        # cardinality column (pred, type) sends each whole partition value
+        # through one writer task; each task writes its own file per value
+        merged.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
         if os.path.exists(path):
             os.rename(path, old)
         try:
@@ -437,12 +365,18 @@ class GraphSink:
             shutil.rmtree(old)
 
     def _merge_iceberg(self, df: DataFrame, table: str, keys: list[str]):
-        df.createOrReplaceTempView("_updates")
+        # one view per call: temp views are session-wide, and concurrent
+        # upserts (run_pipeline, the streaming batch) share the session
+        view = f"_updates_{uuid.uuid4().hex}"
+        df.createOrReplaceTempView(view)
         on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        self.spark.sql(
-            f"MERGE INTO kg.{table} t USING _updates s ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
+        try:
+            self.spark.sql(
+                f"MERGE INTO kg.{table} t USING {view} s ON {on} "
+                "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+            )
+        finally:
+            self.spark.catalog.dropTempView(view)
 
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self._path(table))
@@ -451,8 +385,24 @@ class GraphSink:
 def write_graph(
     sink: GraphSink, nodes: DataFrame, edges: DataFrame
 ) -> None:
-    sink.upsert(nodes, "nodes", keys=["id"], partition_by=["type"])
-    sink.upsert(edges, "edges", keys=["subj", "pred", "obj"], partition_by=["pred"])
+    """Commit nodes and edges concurrently from a two-thread driver pool:
+    the tables are disjoint and neither write reads the other, so their
+    jobs overlap and the executors are not left idle while the driver plans
+    and commits one table. Crash contract as with a serial order: either
+    table may have committed when the other fails, and a replay re-merges
+    both idempotently."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(sink.upsert, nodes, "nodes", keys=["id"], partition_by=["type"]),
+            pool.submit(
+                sink.upsert, edges, "edges",
+                keys=["subj", "pred", "obj"], partition_by=["pred"],
+            ),
+        ]
+        for f in futures:
+            f.result()
 
 
 def versioned_upsert_readback(transcripts: DataFrame) -> DataFrame:

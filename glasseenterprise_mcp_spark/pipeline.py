@@ -6,21 +6,24 @@ Stages:
   A  extract_mentions      mapInPandas, narrow (no shuffle)
   B  linking joins         equi/broadcast/window joins (shuffle on keys)
   C  connected components  iterative hash joins over the refers-to graph
-  D  materialize           dedup + snapshot stamp + partitioned upsert
+                           (lazy: built when ``res.components`` is read)
+  D  materialize           snapshot stamp + partitioned upsert
 
-Every stage records per-partition row counts into a metrics sidecar
-(north rule: "every stage writes per-partition lineage + metrics";
-analogue of the reference's scan summary, src/index.ts:230-238).
+A sink run records per-stage row counts (A_extract, D_edges, D_nodes),
+observed on the passes that already run, plus the per-stage wall-clock when
+``stage_dir`` is set, into a metrics sidecar (analogue of the reference's
+scan summary, src/index.ts:230-238).
 """
 
 from __future__ import annotations
 
 import os
 import time
+from functools import cached_property, reduce
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .operators.canonicalize import connected_components
 from .operators.extract import extract_mentions
@@ -33,66 +36,63 @@ from .operators.link import (
 from .operators.materialize import (
     GraphSink,
     build_edges,
-    build_nodes_with_attrs,
+    build_nodes,
     snapshot_stamp,
     write_graph,
 )
 
 
-def partition_metrics(df: DataFrame, stage: str, snapshot_version: str) -> DataFrame:
-    """Per-partition row counts (lineage sidecar), computed without an extra
-    scan of the source: groupBy spark_partition_id is a map-side count."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows")
-    ).select(
-        F.lit(snapshot_version).alias("snapshot_version"),
-        F.lit(stage).alias("stage"),
-        "partition_id",
-        F.col("rows").cast("long").alias("rows"),
-        F.lit("row_count").alias("metric"),
-    )
+METRICS_SCHEMA = (
+    "snapshot_version string, stage string, partition_id int, rows long, metric string"
+)
 
 
 class PipelineResult:
-    """Pipeline outputs. ``nodes`` and ``metrics`` are built LAZILY on first
-    attribute access: ``build_nodes_with_attrs`` ends in a ``localCheckpoint``
-    whose construction forces full Catalyst analysis/optimization/physical
-    planning (``queryExecution.toRdd`` runs even with ``eager=False``) —
-    measured at 6s (8 cores) to 17s (2 cores) of pure driver time per
-    ``run_pipeline`` call over the amplified bench corpus. A sink-less run
-    (both bench legs, the headline pipeline job) never reads nodes or
-    metrics, so it must not pay for planning them (guide §1.2/§5: don't
-    compute what you throw away — including plan-time work)."""
+    """Pipeline outputs. ``mentions`` (cached) and ``edges`` are frames;
+    ``nodes``, ``components`` and ``metrics`` are LAZY attributes, built on
+    first access and then kept:
+
+    - ``nodes``: the node table. A sink run builds it for its write; a
+      sink-less run caches mentions without ``surface``, so reading
+      ``res.nodes`` there re-extracts the corpus (or re-reads the stage
+      checkpoint when ``stage_dir`` is set).
+    - ``components``: connected components over the refers-to graph (an
+      empty frame when ``with_components=False``). No sink table stores
+      them, so a sink run never computes them unless asked.
+    - ``metrics``: the metrics sidecar as frames of ``METRICS_SCHEMA`` rows:
+      per-stage row counts (``A_extract``, ``D_edges``, ``D_nodes``), then
+      the stage wall-clock rows when ``stage_dir`` is set. A sink run fills
+      it from the counts observed on its writes; a sink-less run counts the
+      frames on first access.
+
+    A sink-less run (the bench legs, the headline pipeline job) reads only
+    ``edges``, so it pays nothing, not even plan time, for the rest."""
 
     def __init__(
         self,
         snapshot_version: str,
         mentions: DataFrame,
-        nodes: DataFrame | Callable[[], DataFrame],
         edges: DataFrame,
-        components: DataFrame,
-        metrics: list[DataFrame] | Callable[[], list[DataFrame]],
+        nodes: Callable[[], DataFrame],
+        components: Callable[[], DataFrame],
+        metrics: Callable[[], list[DataFrame]],
     ):
         self.snapshot_version = snapshot_version
         self.mentions = mentions
         self.edges = edges
-        self.components = components
-        self._nodes = None if callable(nodes) else nodes
-        self._nodes_thunk = nodes if callable(nodes) else None
-        self._metrics = None if callable(metrics) else metrics
-        self._metrics_thunk = metrics if callable(metrics) else None
+        self._build = {"nodes": nodes, "components": components, "metrics": metrics}
 
-    @property
+    @cached_property
     def nodes(self) -> DataFrame:
-        if self._nodes is None:
-            self._nodes = self._nodes_thunk()
-        return self._nodes
+        return self._build["nodes"]()
 
-    @property
+    @cached_property
+    def components(self) -> DataFrame:
+        return self._build["components"]()
+
+    @cached_property
     def metrics(self) -> list[DataFrame]:
-        if self._metrics is None:
-            self._metrics = self._metrics_thunk()
-        return self._metrics
+        return self._build["metrics"]()
 
 
 def _stage_checkpoint(
@@ -127,15 +127,12 @@ def run_pipeline(
     snapshot_version: str | None = None,
     with_components: bool = True,
     stage_dir: str | None = None,
-    cache_edges: bool | None = None,
 ) -> PipelineResult:
-    """``cache_edges``: the triple table is cached only when more than one
-    consumer will read it (default: exactly when a sink is configured —
-    write_graph + the metrics upsert read it twice). With sink=None the
-    caller's single action streams the union directly; building an
-    in-memory columnar copy of the corpus-scale triple table for one read
-    is pure DRAM-bandwidth waste (and at 100TB it would not fit regardless
-    — the sink IS the materialization there)."""
+    """Run stages A-D over ``transcripts``. With a ``sink``, commit the
+    node and edge tables concurrently, then the metrics sidecar; the edge
+    table is never cached, since each sink write reads it once. With
+    ``sink=None`` the caller's single action streams the edge union
+    directly."""
     snap = snapshot_version or snapshot_stamp(spark)
     timings: dict[str, float] = {}
 
@@ -182,27 +179,29 @@ def run_pipeline(
     e_replies = replies_to_edges(slim, mentions)
     e_calls = calls_tool_edges(slim, mentions)
     # refers is dim-sized (distinct url × endpoint matches, not occurrences)
-    # and has two consumers (triple union + CC); materialize it once instead
-    # of re-running the 4-tier broadcast cascade per consumer.
-    e_refers = refers_to_edges(mentions).localCheckpoint(eager=True)
+    # and built from the cached mentions; its second reader, stage C, runs
+    # only when ``res.components`` is read, so it is not checkpointed.
+    e_refers = refers_to_edges(mentions)
 
-    # Stage D edges built before stage C so the (cached) triple table is the
-    # single materialization everything downstream (CC, metrics, sink) reads
-    # — no edge family is ever computed twice.
-    # nodes carry merged attrs maps (A2 + §1.4) — the merge is over the node
-    # dim only, never the edge table. Built as a THUNK: the node build ends
-    # in a localCheckpoint whose construction alone forces full Catalyst
-    # planning (6-17s of driver time at bench scale), so it runs only when
-    # a consumer (sink write, res.nodes, res.metrics) actually asks.
     def nodes_thunk() -> DataFrame:
         if "surface" in mentions.columns:
-            return build_nodes_with_attrs(slim, mentions, snap)
+            return build_nodes(slim, mentions, snap)
         # sink-less run with a pruned cache: the node build needs surface,
         # so re-derive a full-width mention frame (reuses the stage
         # checkpoint when one exists; otherwise re-extracts — only paid
         # when a sink-less caller explicitly reads nodes/metrics)
-        return build_nodes_with_attrs(
-            slim, mentions_full.select(*pipeline_cols), snap
+        return build_nodes(slim, mentions_full.select(*pipeline_cols), snap)
+
+    # Stage C — canonicalization over the cross-corpus linking graph. Feeds
+    # on the refers family DIRECTLY (a dim-sized frame built from the
+    # cached url/endpoint registries), never by filtering the full triple
+    # table — that filter would re-scan corpus-scale edges to recover a
+    # graph that is orders of magnitude smaller.
+    def components_thunk() -> DataFrame:
+        if not with_components:
+            return spark.createDataFrame([], "id binary, comp binary")
+        return connected_components(
+            e_refers.select("subj", "obj"), src="subj", dst="obj"
         )
 
     edges = _stage_checkpoint(
@@ -212,69 +211,61 @@ def run_pipeline(
         "D_edges",
         timings,
     )
-    if cache_edges is None:
-        cache_edges = sink is not None
-    if cache_edges:
-        edges = edges.cache()
 
-    # Stage C — canonicalization over the cross-corpus linking graph. Feeds
-    # on the refers family DIRECTLY (a dim-sized frame built from the
-    # checkpointed url/endpoint registries), never by filtering the full
-    # cached triple table — that filter would re-scan corpus-scale edges to
-    # recover a graph that is orders of magnitude smaller.
-    if with_components:
-        components = connected_components(
-            e_refers.select("subj", "obj"), src="subj", dst="obj"
-        )
-    else:
-        components = spark.createDataFrame([], "id binary, comp binary")
+    def metrics_of(n_edges: int, n_nodes: int) -> list[DataFrame]:
+        counts = {"A_extract": mentions.count(), "D_edges": n_edges, "D_nodes": n_nodes}
+        return _metrics_frames(spark, snap, counts, timings)
 
     result = PipelineResult(
-        snap,
-        mentions,
-        nodes_thunk,
-        edges,
-        components,
-        # metrics thunk closes over the result so the node build is shared
-        # with (and memoized by) the ``nodes`` property
-        lambda: _build_metrics(spark, result, snap, timings),
+        snap, mentions, edges, nodes_thunk, components_thunk,
+        lambda: metrics_of(edges.count(), result.nodes.count()),
     )
 
     if sink is not None:
-        write_graph(sink, result.nodes, edges)
-        metrics = result.metrics
-        m = metrics[0]
-        for x in metrics[1:]:
-            m = m.unionByName(x)
+        # row counts observed on the writes' own passes; the merge path
+        # reads the delta twice, and each pass counts all of it
+        obs_nodes, obs_edges = Observation(), Observation()
+        n_rows = F.count(F.lit(1)).alias("rows")
+        write_graph(
+            sink,
+            result.nodes.observe(obs_nodes, n_rows),
+            edges.observe(obs_edges, n_rows),
+        )
+        result.metrics = metrics_of(obs_edges.get["rows"], obs_nodes.get["rows"])
+        # ``metric`` is part of the key: a stage can carry both a row_count
+        # and a stage_wall_ms row (D_edges with stage_dir set)
         sink.upsert(
-            m,
+            reduce(DataFrame.unionByName, result.metrics),
             "metrics",
-            keys=["snapshot_version", "stage", "partition_id"],
+            keys=["snapshot_version", "stage", "partition_id", "metric"],
             partition_by=["stage"],
         )
 
     return result
 
 
-def _build_metrics(
+def _metrics_frames(
     spark: SparkSession,
-    result: PipelineResult,
     snap: str,
+    counts: dict[str, int],
     timings: dict[str, float],
 ) -> list[DataFrame]:
-    metrics = [
-        partition_metrics(result.mentions, "A_extract", snap),
-        partition_metrics(result.edges, "D_edges", snap),
-        partition_metrics(result.nodes, "D_nodes", snap),
+    """Sidecar rows, one per stage and metric; ``partition_id`` is -1
+    because each row covers the whole stage."""
+    frames = [
+        spark.createDataFrame(
+            [(snap, stage, -1, int(n), "row_count") for stage, n in counts.items()],
+            METRICS_SCHEMA,
+        )
     ]
     if timings:
-        metrics.append(
+        frames.append(
             spark.createDataFrame(
                 [
                     (snap, stage, -1, int(sec * 1000), "stage_wall_ms")
                     for stage, sec in timings.items()
                 ],
-                "snapshot_version string, stage string, partition_id int, rows long, metric string",
+                METRICS_SCHEMA,
             )
         )
-    return metrics
+    return frames

@@ -1,11 +1,10 @@
-"""Span-containment range join (J2/J8/J11) and node attrs dedup-merge (A2)."""
+"""Span-containment range join (J2/J8/J11) and the GraphSink upsert contract."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from glasseenterprise_mcp_spark.operators.link import span_containment_join
-from glasseenterprise_mcp_spark.operators.materialize import merge_node_attrs
 from glasseenterprise_mcp_spark.schemas import MENTIONS_SCHEMA
 
 
@@ -32,29 +31,6 @@ def test_span_containment(spark):
         ("error", "e1 failed badly", "entity", "agent_1"),
         ("error", "e1 failed badly", "config", "CFG_X"),
     }
-
-
-def test_merge_node_attrs_prio(spark):
-    rows = [
-        ("n1", None, "keep", 1, {"a": "1", "b": "x"}),
-        ("n1", "name1", None, 0, {"b": "y", "c": "3"}),  # prio 0 wins on 'b'
-        ("n2", "solo", "s", 0, {}),
-    ]
-    df = spark.createDataFrame(rows, "id string, name string, note string, _prio int, attrs map<string,string>")
-    got = {r.id: (r.name, r.note, dict(r.attrs or {})) for r in merge_node_attrs(df).collect()}
-    assert got["n1"] == ("name1", "keep", {"a": "1", "b": "y", "c": "3"})
-    assert got["n2"] == ("solo", "s", {})
-
-
-def test_merge_node_attrs_no_prio_deterministic(spark):
-    rows = [
-        ("n1", "bbb", {"k": "2"}),
-        ("n1", "aaa", {"k": "1"}),
-    ]
-    df = spark.createDataFrame(rows, "id string, name string, attrs map<string,string>")
-    r = merge_node_attrs(df).collect()[0]
-    # ties resolve by value min — repeatable regardless of partitioning
-    assert r.name == "aaa" and dict(r.attrs) == {"k": "1"}
 
 
 def test_sink_upsert_matches_merge_semantics(spark, tmp_path):
